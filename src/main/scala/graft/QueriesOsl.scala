@@ -671,7 +671,7 @@ object QueriesOsl {
 
     // foreach-mode histogram (`each_value` iteration over a property's
     // distinct values, src/oloop_histogram.cpp:232-330) compiled as ONE
-    // grouped plan: a single groupByKey(id) pass binds each_value per
+    // grouped plan: a single per-person pass binds each_value per
     // customer in memory, then one aggregation buckets every value's
     // per-person returns — not |values| sequential driver-looped queries.
     Q("q_histogram_foreach",

@@ -7,9 +7,10 @@ import Ast._
 /** Per-customer OSL interpreter (Tier B, SURVEY §7.1).
   *
   * Executes a parsed [[Ast.Program]] against one customer's time-ordered
-  * rows. Runs inside `Dataset.groupByKey(id).flatMapGroups` — pure Scala, no
-  * Spark types — and emits one partial-aggregate record per touched group
-  * node, already deduplicated with the reference's distinct-key semantics
+  * rows. Runs inside OslEngine's person runs (groups on the `id` column,
+  * each sorted by `stamp` in Spark) — pure Scala, no Spark types — and
+  * emits one partial-aggregate record per touched group node, already
+  * deduplicated with the reference's distinct-key semantics
   * (`src/queryinterpreter.cpp:167-334`): key = (column, distinct value,
   * row-or-0-for-people, group node). Partials merge relationally downstream.
   *

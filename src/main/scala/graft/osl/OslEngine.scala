@@ -1,6 +1,6 @@
 package graft.osl
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,14 +9,17 @@ import Ast._
 /** Runs OSL scripts over the normalized event DataFrame
   * `(id, stamp, event, …props)` — the engine's Tier B path (SURVEY §7.1):
   *
-  *   events.groupByKey(id) → per-customer [[Interpreter]] → per-person,
+  *   events grouped on the `id` column, each group sorted by `stamp`
+  *   ([[personRuns]]) → per-customer [[Interpreter]] → per-person,
   *   per-node partial aggregates → relational merge.
   *
-  * The only shuffle is on `id` (the same key the storage layer
-  * buckets/partitions by, so at scale this is co-located), plus the final
-  * tiny group-node aggregation. Partials are already deduplicated with the
-  * reference's distinct-key semantics, so the merge is plain SUM/MIN/MAX —
-  * associative, partial-aggregatable, skew-tolerant.
+  * The grouping is on the real `id` column, so Catalyst matches it to the
+  * source's partitioning and ordering: over the catalog's id-bucketed,
+  * (id, stamp)-sorted store there is no id exchange (and no stamp sort
+  * where a bucket holds one file); elsewhere the only shuffle is on `id`,
+  * plus the final tiny group-node aggregation. Partials are already
+  * deduplicated with the reference's distinct-key semantics, so the merge
+  * is plain SUM/MIN/MAX — associative, partial-aggregatable, skew-tolerant.
   */
 object OslEngine {
 
@@ -38,17 +41,6 @@ object OslEngine {
         StructField(s"q_$j", LongType))
     }
     StructType(partialSchema.fields ++ aggFields)
-  }
-
-  /** Convert a Spark Row into the interpreter's value array. */
-  private def rowToValues(row: Row, n: Int): Array[Value] = {
-    val out = new Array[Value](n)
-    var i = 0
-    while (i < n) {
-      out(i) = if (row.isNullAt(i)) VNone else Value(row.get(i))
-      i += 1
-    }
-    out
   }
 
   /** Run an event query script; returns the group-tree nodes as rows
@@ -152,12 +144,7 @@ object OslEngine {
       case (Some(c), Seq()) => return c
       case _ =>
     }
-    val spark = events.sparkSession
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
+    val colIdx: Map[String, Int] = events.schema.fieldNames.zipWithIndex.toMap
     val interps = defs.map(d =>
       (d.name, new Interpreter(Program(Nil, d.code), colIdx, now, sessionGapMs)))
     // single-definition, single-each_row segment scripts admit the same
@@ -166,23 +153,13 @@ object OslEngine {
       case Seq(d) => prefilter(events, d.code, now)
       case _ => events
     }
-
-    implicit val enc = Encoders.product[(String, String)]
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-
-    val ds = source.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val out = ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-      val rowsSeq: IndexedSeq[Array[Value]] = rows
+    val out = personRuns(source) { (pid, rows) =>
       interps.iterator.flatMap { case (name, interp) =>
-        val res = interp.run(VStr(pid), rowsSeq)
+        val res = interp.run(VStr(pid), rows)
         val member = res.returned.lastOption.exists(_.truthy)
         if (member) Iterator((name, pid)) else Iterator.empty
       }
-    }(enc)
+    }(Encoders.product[(String, String)])
     val interpreted = out.toDF("segment", "id")
     compiled.map(_.unionByName(interpreted)).getOrElse(interpreted)
   }
@@ -204,26 +181,11 @@ object OslEngine {
         case None => ()
       }
     }
-    val spark = events.sparkSession
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
+    val colIdx: Map[String, Int] = events.schema.fieldNames.zipWithIndex.toMap
     val interp = new Interpreter(program, colIdx, now, sessionGapMs)
-
-    implicit val enc = Encoders.product[(String, Double)]
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-
-    val ds = events.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val out = ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-      val res = interp.run(VStr(pid), rows)
-      res.returned.iterator.map(v => (pid, v.asDouble))
-    }(enc)
+    val out = personRuns(events) { (pid, rows) =>
+      interp.run(VStr(pid), rows).returned.iterator.map(v => (pid, v.asDouble))
+    }(Encoders.product[(String, Double)])
     out.toDF("id", "value")
   }
 
@@ -233,8 +195,8 @@ object OslEngine {
     * variable bound and emit the per-person return values. Returns
     * `(each_value, id, value)` rows.
     *
-    * Scale shape: ONE `groupByKey(id)` shuffle — the same pass the plain
-    * histogram pays — with the (bounded, index-walk-sized) value list
+    * Scale shape: ONE per-person pass ([[personRuns]]) — the same pass the
+    * plain histogram pays — with the (bounded, index-walk-sized) value list
     * riding in the closure; the inner loop over values happens in memory
     * against the customer's already-sorted rows, exactly the reference's
     * per-partition loop. The alternative (one full query per value, driver
@@ -242,29 +204,15 @@ object OslEngine {
   def histogramForeach(events: DataFrame, script: String, values: Seq[Any],
                        now: Long, sessionGapMs: Long = 30 * 60 * 1000L): DataFrame = {
     val program = Parser.program(script)
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
+    val colIdx: Map[String, Int] = events.schema.fieldNames.zipWithIndex.toMap
     val interp = new Interpreter(program, colIdx, now, sessionGapMs)
     val vals: Array[Any] = values.toArray
-
-    implicit val enc = Encoders.product[(String, String, Double)]
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-
-    val ds = events.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val out = ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
+    val out = personRuns(events) { (pid, rows) =>
       vals.iterator.flatMap { v =>
-        val res = interp.run(VStr(pid), rows,
-          Map("each_value" -> Value(v)))
+        val res = interp.run(VStr(pid), rows, Map("each_value" -> Value(v)))
         res.returned.iterator.map(r => (String.valueOf(v), pid, r.asDouble))
       }
-    }(enc)
+    }(Encoders.product[(String, String, Double)])
     out.toDF("each_value", "id", "value")
   }
 
@@ -279,61 +227,51 @@ object OslEngine {
     * before writes see the customer record and untouched props survive the
     * whole-row merge downstream ([[graft.operators.CustomerProps.writeBack]]).
     *
-    * Scale shape: ONE cogroup shuffle keyed on `id` — the same key the
-    * storage layer buckets by, so on a real cluster both sides arrive
-    * co-partitioned; the output carries only ids + prop values, never the
+    * Scale shape: ONE cogroup on the `id` column — the key the storage
+    * layer buckets by, so Catalyst can keep a bucketed events side in
+    * place; the output carries only ids + prop values, never the
     * event history. Persons without events emit nothing (the reference only
     * runs `on_insert` scripts for customers whose data changed). */
   def propWriteback(events: DataFrame, customers: DataFrame, script: String,
                     now: Long, sessionGapMs: Long = 30 * 60 * 1000L): DataFrame = {
-    val eSchema = events.schema
-    val nCols = eSchema.fields.length
-    val colIdx: Map[String, Int] = eSchema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
+    val colIdx: Map[String, Int] = events.schema.fieldNames.zipWithIndex.toMap
     val cSchema = customers.schema
     val cIdx: Map[String, Int] = cSchema.fieldNames.zipWithIndex.toMap
     require(cIdx.contains("id"), "customers frame must carry an id column")
     val propFields = cSchema.fields.filterNot(_.name == "id").toVector
     require(propFields.nonEmpty, "customers frame declares no customer props")
-    val idType = eSchema.fields(idIdx).dataType
-    val outSchema = StructType(StructField("id", idType) +: propFields)
+    val idField = events.schema("id")
+    val outSchema = StructType(StructField("id", idField.dataType) +: propFields)
     val program = Parser.program(script)
     val interp = new Interpreter(program, colIdx, now, sessionGapMs,
       propNames = propFields.map(_.name).toSet)
+    val nCols = colIdx.size
+    // a cogroup needs both key fields identical, type AND nullability: the
+    // customers id takes the events id's field. A customer id that is null
+    // or does not cast names no events person, so it is dropped first.
+    val cid = col("id").try_cast(idField.dataType)
+    val cu = customers.where(cid.isNotNull).withColumn("id",
+      if (idField.nullable) when(cid.isNotNull, cid) // nullable: no else
+      else coalesce(cid, lit(0).cast(idField.dataType))) // not nullable: a non-null last arg
 
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val evEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(eSchema)
-    val cuEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(cSchema)
-    implicit val outEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(outSchema)
-
-    val ev = events.as(evEnc).groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val cu = customers.as(cuEnc).groupByKey(r => r.get(cIdx("id")).toString)(Encoders.STRING)
-    ev.cogroup(cu) { (pid: String, evIt: Iterator[Row], cuIt: Iterator[Row]) =>
-      val rows = evIt.map(r => rowToValues(r, nCols)).toArray
-      if (rows.isEmpty) Iterator.empty // customer row only: script doesn't run
-      else {
-        java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-        val init: Map[String, Value] = cuIt.buffered.headOption match {
-          case Some(cr) => propFields.map { f =>
-            val i = cIdx(f.name)
-            f.name -> (if (cr.isNullAt(i)) (VNone: Value) else Value(cr.get(i)))
-          }.toMap
-          case None => propFields.map(_.name -> (VNone: Value)).toMap
-        }
-        val res = interp.run(VStr(pid), rows, init)
-        if (res.props.isEmpty) Iterator.empty
+    byId(events).cogroupSorted(byId(cu))(col("stamp"))() {
+      (key: Row, evIt: Iterator[Row], cuIt: Iterator[Row]) =>
+        val rows = personRows(evIt, nCols)
+        if (rows.isEmpty) Iterator.empty // customer row only: script doesn't run
         else {
-          val idRaw: Any = idType match {
-            case LongType    => rows(0)(idIdx).asLong
-            case IntegerType => rows(0)(idIdx).asLong.toInt
-            case _           => rows(0)(idIdx).asStr
+          val init: Map[String, Value] = cuIt.buffered.headOption match {
+            case Some(cr) => propFields.map { f =>
+              val i = cIdx(f.name)
+              f.name -> (if (cr.isNullAt(i)) (VNone: Value) else Value(cr.get(i)))
+            }.toMap
+            case None => propFields.map(_.name -> (VNone: Value)).toMap
           }
-          Iterator(Row.fromSeq(
-            idRaw +: propFields.map(f => valueToSpark(res.props(f.name), f.dataType))))
+          val res = interp.run(VStr(key.get(0).toString), rows, init)
+          if (res.props.isEmpty) Iterator.empty
+          else Iterator(Row.fromSeq(key.get(0) +:
+            propFields.map(f => valueToSpark(res.props(f.name), f.dataType))))
         }
-      }
-    }(outEnc).toDF()
+    }(Encoders.row(outSchema))
   }
 
   /** OSL value → Spark value under the DECLARED prop type — the schema
@@ -442,30 +380,14 @@ object OslEngine {
   private def runInterpreter(events: DataFrame, program: Program,
                              now: Long, sessionGapMs: Long,
                              stampedRowIds: Boolean = false): DataFrame = {
-    val spark = events.sparkSession
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
+    val colIdx: Map[String, Int] = events.schema.fieldNames.zipWithIndex.toMap
     val selects =
       (if (program.select.nonEmpty) program.select
        else Seq(SelectCol("count", "id", "id", None, all = false))).toVector
     val nSel = selects.length
-    val outSchema = fullPartialSchema(nSel)
     val interp = new Interpreter(program, colIdx, now, sessionGapMs, stampedRowIds)
 
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-    implicit val outEnc: org.apache.spark.sql.Encoder[Row] =
-      ExpressionEncoder(outSchema)
-
-    val ds = events.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-
-    ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
+    personRuns(events) { (pid, rows) =>
       val res = interp.run(VStr(pid), rows)
       res.nodes.iterator.map { case (path, bufs) =>
         val gs: Seq[Any] = (0 until MaxDepth).map(i =>
@@ -479,6 +401,37 @@ object OslEngine {
         }
         Row.fromSeq((path.length +: gs) ++ aggs)
       }
-    }(outEnc)
+    }(Encoders.row(fullPartialSchema(nSel)))
   }
+
+  /** `df` grouped on its `id` COLUMN. A column key, unlike a lambda key,
+    * lets Catalyst match the grouping to the source's id partitioning and
+    * (id, stamp) ordering: no exchange over the id-bucketed store, and none
+    * again after the pre-filter's semi-join. */
+  private def byId(df: DataFrame): KeyValueGroupedDataset[Row, Row] =
+    df.groupBy(col("id"))
+      .as(Encoders.row(df.select("id").schema), Encoders.row(df.schema))
+
+  /** The Tier B person run: `f` gets each person's id as the interpreter's
+    * string and their rows in stamp order (sorted by Spark inside the
+    * group), once per person. */
+  private def personRuns[U: Encoder](events: DataFrame)(
+      f: (String, Array[Array[Value]]) => IterableOnce[U]): Dataset[U] = {
+    val nCols = events.schema.length
+    byId(events).flatMapSortedGroups(col("stamp")) { (key: Row, it: Iterator[Row]) =>
+      f(key.get(0).toString, personRows(it, nCols))
+    }
+  }
+
+  /** One person's Spark rows as the interpreter's value arrays. */
+  private def personRows(it: Iterator[Row], nCols: Int): Array[Array[Value]] =
+    it.map { row =>
+      val out = new Array[Value](nCols)
+      var i = 0
+      while (i < nCols) {
+        out(i) = if (row.isNullAt(i)) VNone else Value(row.get(i))
+        i += 1
+      }
+      out
+    }.toArray
 }

@@ -369,19 +369,12 @@ object TierA {
                   s"__vq_$j" -> count(
                     when(writePred && col(s.prop).isNotNull, 1)).over(vqFrame)
               }
-            val derived = accCols ++ vqCols
-            // batch only when no derived column reads another's name (an
-            // accumulator increment that referenced a sibling `__acc_`
-            // column must keep the sequential projection order)
-            val independent = derived.forall { case (_, c) =>
-              val s = c.toString
-              !derived.exists { case (n2, _) => s.contains(n2) }
-            }
-            val filtered = (if (derived.isEmpty) accBase
-                            else if (independent) accBase.withColumns(derived.toMap)
-                            else derived.foldLeft(accBase) {
-                              case (df, (n, c)) => df.withColumn(n, c) })
-              .drop(accTmp: _*)
+            // one projection unless a derived column reads a sibling's
+            // name (an accumulator increment over another `__acc_` column
+            // must see it projected first): ColBatch's dependency rule
+            val batch = new ColBatch(accBase)
+            (accCols ++ vqCols).foreach { case (n, c) => batch.add(n, c) }
+            val filtered = batch.df.drop(accTmp: _*)
             if (lvlTallies.size == 1 && lvlTallies.head._1.isEmpty)
               rollupPlan(filtered, tallyGroupsF.head, selects, aggs)
             else
@@ -4174,7 +4167,7 @@ object TierA {
       case Call(name, as) => traverse(as.map(compileRet)).flatMap(marshal(name, _))
       case other => compileExpr(other, now)
     }
-    // interpreter person ids surface as strings (groupByKey key)
+    // interpreter person ids surface as strings (the person-run key)
     compileRet(retExpr).map(rc =>
       agged.select(col("id").cast("string").as("id"),
         rc.cast("double").as("value")))
@@ -4579,7 +4572,7 @@ object TierA {
     * withColumn — round-18 BuildProfile), so N independent ladder columns
     * should cost ONE pass, not N. Semantics are preserved exactly: a column
     * whose expression references a still-pending name (detected on the
-    * unresolved attribute names) flushes the batch first, so each batch is
+    * rendered expression) flushes the batch first, so each batch is
     * internally dependency-free and `withColumns` order-independence holds;
     * re-adding a pending name flushes too (replacement must see the prior
     * projection). Reading [[df]] flushes. The analyzer extracts the batch's
@@ -4590,10 +4583,13 @@ object TierA {
     private var base = df0
     private val pending =
       scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    // dependency test on the column's rendered expression: every attribute
-    // reference prints its name verbatim, so a substring probe can never
-    // MISS a pending-name reference — it can only flush spuriously on a
-    // name collision (harmless: a flush is always semantics-preserving)
+    // the one column-dependency rule in this file: a probe on the column's
+    // rendered expression. Every attribute reference prints its name
+    // verbatim, so a substring probe can never MISS a pending-name
+    // reference — it can only flush spuriously on a name collision
+    // (harmless: a flush is always semantics-preserving). An exact walk
+    // over the unresolved tree (`Column.node`) is private to Spark's
+    // `sql` package, so it is not reachable from here.
     private def refersToPending(c: Column): Boolean = {
       val s = c.toString
       pending.keysIterator.exists(s.contains)

@@ -23,6 +23,11 @@ class OslSpec extends SparkSpec {
     ("bob", Tue + 1 * H, "purchase", "hammer", 19.99, Seq("hardware"))
   ).toDF("id", "stamp", "event", "product_name", "product_price", "product_group")
 
+  // the same history under Long-typed ids: both tiers name a person by the
+  // id's plain string ("42", never "42.0")
+  private def longIds = highstreet.withColumn("id",
+    when(col("id") === "alice", lit(42L)).otherwise(lit(7L)))
+
   test("README event query: tally tree with distinct-person counts per node") {
     val script =
       """select
@@ -180,6 +185,28 @@ class OslSpec extends SparkSpec {
     assert(grouped == looped)
     assert(grouped("fly rod") == Set(("alice", 1.0), ("bob", 1.0)))
     assert(grouped("hammer") == Set(("alice", 0.0), ("bob", 1.0)))
+  }
+
+  test("propWriteback keys customer records onto the events id type") {
+    // a seed reaches its person whichever side is nullable or textual; an
+    // id that names no events person (or is null) seeds nobody
+    def copied(events: org.apache.spark.sql.DataFrame,
+               customers: org.apache.spark.sql.DataFrame) =
+      OslEngine.propWriteback(events, customers, "copied = seed", now = Tue)
+        .collect().map(r => (String.valueOf(r.get(0)), Option(r.get(2)))).toSet
+    // non-nullable Long events ids, nullable textual customer ids
+    assert(!longIds.schema("id").nullable)
+    assert(copied(longIds,
+      Seq(("42", Some(1.0)), ("u9", Some(2.0)), (null, Some(3.0)))
+        .toDF("id", "seed").withColumn("copied", col("seed"))) ==
+      Set(("42", Some(1.0)), ("7", None)))
+    // nullable textual events ids, non-nullable Long customer ids
+    val textIds = highstreet.withColumn("id",
+      when(col("id") === "alice", lit("42")).otherwise(col("id")))
+    assert(textIds.schema("id").nullable)
+    assert(copied(textIds, Seq((42L, Some(5.0))).toDF("id", "seed")
+        .withColumn("copied", col("seed"))) ==
+      Set(("42", Some(5.0)), ("bob", None)))
   }
 
   test("language: vars, containers, for/in, break, if/else") {
@@ -1476,6 +1503,12 @@ class OslSpec extends SparkSpec {
       """seen = test(event) where product_price.is(> 100)
         |return(seen)
         |""".stripMargin)
+    histDiff(
+      """total = sum(product_price) where event.is(== 'purchase')
+        |return(bucket(total, 25))
+        |""".stripMargin, longIds)
+    assert(OslEngine.histogram(longIds, "return(1)", now = Tue, forceTierB = true)
+      .collect().map(_.getString(0)).toSet == Set("42", "7"))
     // interpreter-only shapes still decline: frames, var-referencing wheres
     assert(TierA.compileHistogram(Parser.program(
       """t = sum(product_price).look_back(2_hours) where event.is(== 'purchase')
@@ -1527,6 +1560,15 @@ class OslSpec extends SparkSpec {
       """@segment active
         |return((count(event) where event.is(!= 'nothing')) > 1)
         |""".stripMargin)
+    val buyers =
+      """@segment buyers
+        |if event.ever(== 'purchase')
+        |  return(true)
+        |end
+        |""".stripMargin
+    segDiff(buyers, longIds)
+    assert(OslEngine.segments(longIds, buyers, now = Tue, forceTierB = true)
+      .collect().map(_.getString(1)).toSet == Set("42", "7"))
     // funnels and var-stateful segments still interpret
     assert(TierA.compileSegments(Parser.segments(
       """@segment signup_then_purchase

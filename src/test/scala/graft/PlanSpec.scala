@@ -266,20 +266,20 @@ class PlanSpec extends SparkSpec {
     // (b) a Tier-A OSL chain funnel: the person window rides the bucket
     // layout — no id exchange, no (id, stamp) sort; the only exchange left
     // is the final tiny result-tree rollup
-    val chain = graft.osl.OslEngine.query(events,
-      """select
-        |  count id as customers
-        |  sum value as total_value
-        |end
-        |each_row where event.is(== 'signup')
-        |  << 'signup'
-        |  each_row.continue().next() where event.is(== 'view')
-        |    each_row.continue().next() where event.is(== 'purchase')
-        |      << 'converted'
-        |    end
-        |  end
-        |end
-        |""".stripMargin, now = now + 86400000L)
+    val chainScript = """select
+      |  count id as customers
+      |  sum value as total_value
+      |end
+      |each_row where event.is(== 'signup')
+      |  << 'signup'
+      |  each_row.continue().next() where event.is(== 'view')
+      |    each_row.continue().next() where event.is(== 'purchase')
+      |      << 'converted'
+      |    end
+      |  end
+      |end
+      |""".stripMargin
+    val chain = graft.osl.OslEngine.query(events, chainScript, now = now + 86400000L)
     val p = chain.queryExecution.executedPlan.toString
     assert(!p.contains("MapGroups"), s"chain fell back to Tier B:\n$p")
     assert(!p.contains("Exchange hashpartitioning(id"),
@@ -289,6 +289,26 @@ class PlanSpec extends SparkSpec {
       .filter(_.contains("stamp"))
     assert(stampSorts.isEmpty,
       s"person window still sorts by stamp:\n${stampSorts.mkString("\n")}\n$p")
+    // (b') the same chain forced onto Tier B: the interpreter's person
+    // groups ride the bucket layout too — MapGroups keyed on the id column,
+    // no lambda-key AppendColumns, no id exchange, no stamp sort — and it
+    // answers exactly what Tier A answers
+    val tierB = graft.osl.OslEngine.query(events, chainScript,
+      now = now + 86400000L, forceTierB = true)
+    val pb = tierB.queryExecution.executedPlan.toString
+    assert(pb.contains("MapGroups"), s"forced Tier B did not interpret:\n$pb")
+    assert(!pb.contains("AppendColumns"), s"Tier B still builds a lambda key:\n$pb")
+    assert(!pb.contains("Exchange hashpartitioning(id"),
+      s"Tier B person groups still pay the id exchange:\n$pb")
+    val tierBStampSorts = pb.linesIterator
+      .filter(l => l.trim.startsWith("+- Sort") || l.trim.startsWith("Sort "))
+      .filter(_.contains("stamp"))
+    assert(tierBStampSorts.isEmpty,
+      s"Tier B person groups still sort by stamp:\n${tierBStampSorts.mkString("\n")}\n$pb")
+    def canonTree(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    assert(canonTree(tierB) == canonTree(chain))
+
     // parity: the bucketed-path rows are exactly the committed snapshot
     val got = events.collect().map(_.toString).sorted.toSeq
     assert(got.size == 32, s"expected 32 committed rows, got ${got.size}")
